@@ -116,29 +116,6 @@ def entry(spark: SparkSession) -> DataFrame:
     return _run_corpus("tpch/q1")(spark, "/root/testdata/sf0.001")
 
 
-def preload_mem(spark: SparkSession, sf_dir: str, partitions: int | None = None) -> None:
-    """Reference ``--mem-table`` analog (benchmarks/src/tpch/run.rs:226-235):
-    materialize every table in memory N-ways and pin the registration, so
-    SQL-corpus queries read the cached MemTable instead of parquet.
-    DataFrame-native operator queries read parquet by path and are unaffected
-    — same scope as the reference flag, which only feeds its SQL benchmark."""
-    from datafusion_distributed_experiment_spark.engine import _TPCH_TABLES
-    from datafusion_distributed_experiment_spark.sources.tables import (
-        read_parquet_table,
-    )
-
-    eng = Engine(spark)
-    done: set = set()
-    for t in _TPCH_TABLES:
-        eng.register_mem(
-            t, read_parquet_table(spark, f"{sf_dir}/{t}.parquet"), partitions=partitions
-        )
-        done.add(t)
-    # pin the whole-session record in one shot: the MemTables ARE this
-    # sf_dir's views now, so any prior dir's record must not linger
-    _registered[spark] = (sf_dir, done)
-
-
 def query_tiers() -> list[tuple[str, dict[str, Callable[[SparkSession, str], DataFrame]]]]:
     """Queries grouped by tier, gate-ordered: the driver oracle-checks the
     FIRST 50 entries, so the window rotates round-over-round.
@@ -178,8 +155,7 @@ def query_tiers() -> list[tuple[str, dict[str, Callable[[SparkSession, str], Dat
       media_frames, media_meta_stats — the 11 alphabetically-last
       five-times-green sit out one more round). stream_topk is the one
       streaming query in the window; it sits in its own
-      "shallow-r13-streaming" subtier so the bench's measure-last rule
-      still isolates it (tier NAME carries the rule).
+      "shallow-r13-streaming" subtier.
 
     SACRIFICED this round (24 r13-green, deepest-evidence-first; they
     re-enter at round 16 alongside the shallowest r14-green): the 11
@@ -191,10 +167,7 @@ def query_tiers() -> list[tuple[str, dict[str, Callable[[SparkSession, str], Dat
     ann_lsh, dedup_exact, embedding_dedup, minhash_dedup_pairs,
     minhash_signatures, ngram_jaccard_pairs, simhash_dedup_pairs,
     simhash_signatures, token_count). The 50 r14-green queries sit
-    behind the window as the freshest cohort.
-
-    The bench re-orders tiers for measurement isolation ("streaming"-named
-    tiers run last); see ``operators.pipeline_tiers``."""
+    behind the window as the freshest cohort."""
     sql: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for name in _SQL_QUERIES:
         sql[name.split("/", 1)[1]] = _run_corpus(name)
@@ -238,7 +211,7 @@ def query_tiers() -> list[tuple[str, dict[str, Callable[[SparkSession, str], Dat
             "events_cube",
         ),
     }
-    # --- slots 25-36: r13-green with one to four green rows --------------
+    # --- slots 25-35: r13-green with one to four green rows --------------
     shallow_r13 = {
         **_pop("similarity", "ivf_pq_index_build"),
         **_pop("sketches", "events_quantile_sketch", "cms_heavy_hitters"),
@@ -248,7 +221,7 @@ def query_tiers() -> list[tuple[str, dict[str, Callable[[SparkSession, str], Dat
         **_pop("selection", "dsir_weights"),
         **_pop("dedup", "span_scrub", "winnow_fingerprints"),
     }
-    # --- slots 37-49: the 14 alphabetically-first 5x-green r13 (minus
+    # --- slots 36-49: the 14 alphabetically-first 5x-green r13 (minus
     # stream_topk, which is 4x-green and rides the streaming subtier) -----
     mid_r13 = {
         **_pop("joins", "bloom_semi_agg"),
@@ -261,9 +234,8 @@ def query_tiers() -> list[tuple[str, dict[str, Callable[[SparkSession, str], Dat
         **_pop("similarity", "embedding_quantize"),
         **_pop("multimodal", "media_dedup", "media_frames", "media_meta_stats"),
     }
-    # --- slot 50: the one streaming query in the window; its OWN
-    # "streaming"-named subtier so the bench measure-last rule (substring
-    # match on tier name) still pushes it behind every batch timing -------
+    # --- slot 50: the one streaming query in the window, in its own
+    # subtier ------------------------------------------------------------
     window_streaming = _pop("streaming", "stream_topk")
     # `sql` now holds only the r14-green SQL cohort (q2, q13, q15, q17,
     # q20-q22, q1_decimal, the events adhoc re-verified at r14 — the

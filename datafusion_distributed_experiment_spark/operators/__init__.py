@@ -30,14 +30,7 @@ def pipeline_tiers() -> list[tuple[str, dict[str, Callable[[SparkSession, str], 
     entries the driver had never checked (they were only covered by pytest
     and the committed GATE.txt full sweep). The tiers now outside the window
     all hold green rows in CORRECTNESS_r04 and stay covered by pytest +
-    gate.sh.
-
-    This order is for CORRECTNESS runs (each entry independent). The bench
-    re-orders by tier name — streaming runs LAST there, because each
-    micro-batch query leaves RocksDB state-store maintenance threads and
-    checkpoint cleanup running for a while after it stops, which measurably
-    contaminates the next few *batch* query timings in a sequential bench
-    (observed 0.7s -> 5-8s on the text tier when streaming preceded it)."""
+    gate.sh."""
     from ..sources import custom
     from ..streaming import events as streaming_events
     from ..streaming import stateful
@@ -117,8 +110,6 @@ def staged_tiers() -> list[tuple[str, dict[str, Callable[[SparkSession, str], Da
         ("sketches", sketches.staged_queries()),
         ("similarity", similarity.staged_queries()),
         ("curation", curation.staged_queries()),
-        # named so the bench's measure-last rule matches it (RocksDB
-        # maintenance threads must not contaminate batch timings)
         ("streaming-staged", streaming_events.staged_queries()),
     ]
 

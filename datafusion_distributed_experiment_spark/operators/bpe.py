@@ -159,7 +159,7 @@ def _trained_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     overhead (measured over the 138-row sf0.1 char table: two rounds at
     width 32 take 1.31 s warm / 3.0 s cold vs 1.02 s / 1.5 s at width 4 —
     a modest steady-state win, most of the cold gap being codegen
-    warm-up the bench's warm epoch absorbs). Width grows back
+    warm-up that one unmeasured run absorbs). Width grows back
     toward the session width at 100k char rows per partition, so a real
     100-TB vocabulary (millions of words) still fans out. The width lives
     in a sibling session (shared context/cache, own SQLConf) so

@@ -1144,16 +1144,17 @@ def connected_components_star(pairs: DataFrame, max_iters: int = 32) -> DataFram
 # CONCURRENT query on another sf_dir could still be iterating over
 # (truncated lineage makes that unrecoverable — review fix, round 11);
 # explicit eviction now happens only through clear_pair_graph_memo at
-# quiesced points (between measured bench queries). Keys assume the
+# quiesced points (``session.evict_query_state``). Keys assume the
 # parquet under sf_dir is immutable for the application's lifetime (true
 # for the read-only testdata dirs); a path whose contents are rewritten
 # in-process must call :func:`clear_pair_graph_memo` first.
 #
 # TIMED RUNS MUST NOT REUSE THE MEMO: a measured dedup_clusters iteration
 # that skips its documented dominant cost (the LSH mine) measures a
-# different job. The bench's between-query eviction and the scaling probe
-# call :func:`clear_pair_graph_memo` so every measured iteration rebuilds
-# the graph (round-8 advisory fix).
+# different job. ``session.evict_query_state`` (used by the scaling probe,
+# the phase profiler and the differential tests between runs) calls
+# :func:`clear_pair_graph_memo` so every measured run rebuilds the graph
+# (round-8 advisory fix).
 _PAIR_GRAPH_MEMO: dict[tuple[str, str], tuple[DataFrame, frozenset[int]]] = {}
 _PAIR_GRAPH_LOCK = threading.Lock()
 
@@ -1187,8 +1188,8 @@ def _checkpoint_rdd_ids(df: DataFrame) -> frozenset[int]:
 
 def clear_pair_graph_memo() -> None:
     """Drop all memoized pair graphs and release their checkpoint blocks.
-    Called by the bench harness between measured queries and by the scaling
-    probe between measured runs; also the escape hatch when an sf_dir's
+    Called through ``session.evict_query_state`` between measured or
+    differential runs; also the escape hatch when an sf_dir's
     parquet is rewritten within one application.
 
     ``DataFrame.unpersist`` alone is NOT enough: it uncaches the query via
@@ -1199,7 +1200,7 @@ def clear_pair_graph_memo() -> None:
     some later GC. The evicted frame is unusable afterward (truncated
     lineage), which is fine: its memo entry is gone and the next caller
     rebuilds. Callers must be quiesced (no in-flight query is consuming a
-    memoized graph) — the harness call sites run between measured queries."""
+    memoized graph) — the call sites run between whole queries."""
     while True:
         with _PAIR_GRAPH_LOCK:
             if not _PAIR_GRAPH_MEMO:
@@ -1648,8 +1649,11 @@ def minhash_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     band-probe + Jaccard verification from the POST-UPSERT persisted
     parquet — a green row proves the maintained on-disk state, not the
     logical dataflow. The merged corpus rides the verified
-    :func:`cdc.cdc_merge` kernel. Work per refresh is
-    O(delta + touched-partition bytes), never O(index)."""
+    :func:`cdc.cdc_merge` kernel. Work per invocation is O(index): the
+    one partitioned write re-signatures the historical corpus and writes
+    the whole post-delta index. The O(delta + touched-partition bytes)
+    bound belongs only to the standalone :func:`_apply_band_delta`
+    kernel."""
     from .cdc import cdc_merge
 
     hist = _hist_docs(spark, sf_dir).localCheckpoint()

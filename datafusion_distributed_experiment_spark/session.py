@@ -19,6 +19,44 @@ from typing import Mapping
 from pyspark.sql import SparkSession
 
 
+def local_cpus() -> int:
+    """Local-mode parallelism: ``$SPARK_GRAFT_CPUS`` when the deployment
+    sets it, else the cores this process may run on."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return int(env)
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # platforms without CPU affinity (macOS)
+        return os.cpu_count() or 1
+
+
+def local_driver_memory() -> str:
+    """Local-mode heap: ``$SPARK_GRAFT_DRIVER_MEM`` when the deployment
+    sets it, else half of physical memory — the driver JVM hosts every
+    executor thread, and the other half stays for Python workers and the
+    page cache, so a bare session never asks for more heap than the host
+    has."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{phys // 2 // 2**20}m"
+
+
+def evict_query_state(spark: SparkSession) -> None:
+    """Drop the state one query leaves for the next: the catalog cache
+    PLUS cross-query operator memos. The minhash pair graph shared by
+    dedup_clusters / dedup_clusters_star is a localCheckpoint that lives
+    OUTSIDE the catalog cache and survives ``clearCache()``; a timed or
+    differential run that reused it would skip the query's dominant cost
+    (the LSH mine) and exercise a different job."""
+    spark.catalog.clearCache()
+    from .operators.dedup import clear_pair_graph_memo
+
+    clear_pair_graph_memo()
+
+
 def default_spark_conf(
     shuffle_partitions: int | None = None,
     prefer_hash_join: bool = True,
@@ -77,9 +115,7 @@ def default_spark_conf(
         # until a multi-second stop-the-world stall. 5min bounds the backlog.
         "spark.cleaner.periodicGC.interval": "5min",
         "spark.sql.shuffle.partitions": str(
-            shuffle_partitions
-            if shuffle_partitions is not None
-            else int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+            shuffle_partitions if shuffle_partitions is not None else local_cpus()
         ),
     }
     return conf
@@ -181,24 +217,21 @@ def build_session(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` when no cluster is
+    ``master`` defaults to ``local[<local_cpus()>]`` when no cluster is
     configured; on a real cluster pass ``None`` with ``spark.master`` set by
     the deployment (YARN/K8s/standalone), mirroring the reference's pluggable
     ``ChannelResolver`` worker discovery (reference ``src/channel_manager.rs:29-34``).
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_MASTER" not in os.environ:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{local_cpus()}]"
     if master:
         builder = builder.master(master)
     if master and master.startswith("local"):
         # In local mode the driver JVM hosts all executor threads; the 1g
         # default heap dies on any real shuffle. On a cluster, executor
         # memory comes from the deployment instead.
-        builder = builder.config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
-        )
+        builder = builder.config("spark.driver.memory", local_driver_memory())
     for k, v in default_spark_conf(shuffle_partitions=shuffle_partitions).items():
         builder = builder.config(k, v)
     if extra_conf:

@@ -27,11 +27,12 @@ def main() -> int:
 
     import __spark_entry__ as entry_mod
     from datafusion_distributed_experiment_spark import build_session
+    from datafusion_distributed_experiment_spark.session import local_cpus
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     spark = build_session(
         master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
+        shuffle_partitions=cpus,
         app_name="dump-plans",
         extra_conf={"spark.ui.enabled": "false"},
     )

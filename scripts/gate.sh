@@ -19,6 +19,14 @@ ART=GATE.txt
 python -m pytest tests/ -q >> "$ART" 2>&1
 PYTEST_RC=$?
 
+# The benchmark's own unit tests (input generator, stats, trace wrapper).
+{
+  echo
+  echo "-- pytest perfbench/tests -q --"
+} >> "$ART"
+python -m pytest perfbench/tests -q >> "$ART" 2>&1
+PERFBENCH_RC=$?
+
 {
   echo
   echo "-- oracle sweep sf0.001 (scripts/verify_correctness.py) --"
@@ -30,7 +38,7 @@ ORACLE_RC=$?
 # watermark-bounded state, LSH candidate volume, iterative convergence) —
 # the class where correctness rot has historically tracked DATA SCALE, not
 # code (round 3's timestamp-unit drift passed at sf0.001). The driver only
-# verifies sf0.01; the bench runs sf0.1; this closes that gap.
+# verifies sf0.01; this closes the gap to sf0.1.
 {
   echo
   echo "-- oracle sweep sf0.1 subset (data-sensitive operators) --"
@@ -67,11 +75,11 @@ STAGED_RC=$?
 
 {
   echo
-  echo "== result: pytest rc=$PYTEST_RC oracle rc=$ORACLE_RC sf0.1-subset rc=$SF01_RC spill rc=$SPILL_RC staged rc=$STAGED_RC =="
+  echo "== result: pytest rc=$PYTEST_RC perfbench rc=$PERFBENCH_RC oracle rc=$ORACLE_RC sf0.1-subset rc=$SF01_RC spill rc=$SPILL_RC staged rc=$STAGED_RC =="
 } >> "$ART"
 
 tail -n 5 "$ART"
-if [ "$PYTEST_RC" -ne 0 ] || [ "$ORACLE_RC" -ne 0 ] || [ "$SF01_RC" -ne 0 ] || [ "$SPILL_RC" -ne 0 ] || [ "$STAGED_RC" -ne 0 ]; then
+if [ "$PYTEST_RC" -ne 0 ] || [ "$PERFBENCH_RC" -ne 0 ] || [ "$ORACLE_RC" -ne 0 ] || [ "$SF01_RC" -ne 0 ] || [ "$SPILL_RC" -ne 0 ] || [ "$STAGED_RC" -ne 0 ]; then
   echo "GATE RED — do not snapshot. Full output in $ART" >&2
   exit 1
 fi

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Ad-hoc phase profiler for the optimization round (guide §1: measure
-first). Runs a query N times on the bench session shape and prints per-run
+first). Runs a query N times on a local session and prints per-run
 wall seconds; with --phases, prints a per-Spark-job breakdown by attaching a
 job-description listener via setJobDescription around labelled regions.
 
@@ -30,12 +30,12 @@ def main() -> int:
 
     import __spark_entry__ as entry_mod
     from datafusion_distributed_experiment_spark import build_session
-    from datafusion_distributed_experiment_spark.bench import _force, _evict_query_state
+    from datafusion_distributed_experiment_spark.session import evict_query_state, local_cpus
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = local_cpus()
     spark = build_session(
         master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
+        shuffle_partitions=cpus,
         app_name="profile",
         extra_conf={"spark.ui.enabled": "false"},
     )
@@ -52,11 +52,11 @@ def main() -> int:
     n = spark.sparkContext.defaultParallelism
     spark.range(n).repartition(n).mapInPandas(lambda it: it, "id long").count()
     try:
-        _force(fn(spark, args.sf_dir))
+        len(fn(spark, args.sf_dir).collect())
     except Exception as exc:  # noqa: BLE001
         print(f"warmup failed: {exc}")
         return 1
-    _evict_query_state(spark)
+    evict_query_state(spark)
 
     tracker = spark.sparkContext.statusTracker()
     for i in range(args.n):
@@ -86,7 +86,7 @@ def main() -> int:
                     parts.append(str(len(info.stageIds)))
             print(f"  jobs this run: {len(jobs)} (stages per job: {','.join(parts)})")
         spark.sparkContext.setJobGroup(f"cleanup-{i}", "cleanup")
-        _evict_query_state(spark)
+        evict_query_state(spark)
     return 0
 
 

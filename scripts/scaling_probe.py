@@ -207,6 +207,7 @@ def build_xstep_dir(spark) -> str:
 def main() -> int:
     import __spark_entry__ as entry_mod
     from datafusion_distributed_experiment_spark import build_session
+    from datafusion_distributed_experiment_spark.session import evict_query_state
 
     args = sys.argv[1:]
     xstep = "--xstep" in args
@@ -241,18 +242,16 @@ def main() -> int:
     for name in only:
         fn = queries[name]
         times, rows = [], []
-        from datafusion_distributed_experiment_spark.bench import _evict_query_state
-
         for sf_dir in sf_dirs:
             fn(spark, sf_dir).collect()  # warm: listing, codegen, caches
             # full eviction (catalog cache + cross-query operator memos like
             # the minhash pair graph) so the measured run rebuilds the
             # operator's whole declared pipeline, not a memoized suffix
-            _evict_query_state(spark)
+            evict_query_state(spark)
             t0 = time.perf_counter()
             rows.append(len(fn(spark, sf_dir).collect()))
             times.append(round(time.perf_counter() - t0, 3))
-            _evict_query_state(spark)
+            evict_query_state(spark)
         growth = [
             round(times[i + 1] / times[i], 2) if times[i] > 0 else None
             for i in range(len(times) - 1)

@@ -153,19 +153,19 @@ def test_full_surface_partition_count_independence(name, spark):
     independence; streaming queries re-drain their bounded replay under
     each topology (their STATE partitioning is fixed by _stream_session —
     what this checks is the batch half and the drain plumbing)."""
-    from datafusion_distributed_experiment_spark.bench import _evict_query_state
+    from datafusion_distributed_experiment_spark.session import evict_query_state
     from datafusion_distributed_experiment_spark.operators import staged_queries
 
     fn = {**entry_mod.queries(), **staged_queries()}[name]
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "1")
-        _evict_query_state(spark)
+        evict_query_state(spark)
         single = canonical(fn(spark, SF_DIR).toPandas())
         spark.conf.set("spark.sql.shuffle.partitions", "8")
-        _evict_query_state(spark)
+        evict_query_state(spark)
         distributed = canonical(fn(spark, SF_DIR).toPandas())
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-        _evict_query_state(spark)
+        evict_query_state(spark)
     assert single == distributed

@@ -296,27 +296,6 @@ def test_clustered_layout_prunes_at_read_time(spark, tmp_path):
     assert rows_c < rows_p / 3
 
 
-def test_preload_mem_serves_sql_from_cached_tables(spark, tmp_path):
-    """The --mem-table analog: preload_mem materializes every table in
-    memory and pins the registration, so SQL-corpus queries read the cached
-    MemTable (InMemoryTableScan in the plan) instead of parquet."""
-    import __spark_entry__ as entry_mod
-
-    entry_mod.preload_mem(spark, SF_DIR, partitions=4)
-    try:
-        df = entry_mod.queries()["q6"](spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "InMemoryTableScan" in plan, plan[:2000]
-        assert len(df.collect()) == 1
-    finally:
-        spark.catalog.clearCache()
-        # restore parquet-backed registrations for other tests
-        from datafusion_distributed_experiment_spark import Engine
-
-        entry_mod._registered.clear()
-        Engine(spark).register_sf_dir(SF_DIR)
-
-
 def test_write_zordered_bounds_both_dimensions(spark, tmp_path):
     """Z-order layout: every output file covers a bounded interval in BOTH
     clustered dimensions (quadtree cells), so min/max stats prune selective

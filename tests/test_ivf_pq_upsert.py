@@ -391,14 +391,16 @@ def test_apply_index_delta_equals_set_semantics_on_random_inputs(
     assert got == want, (base_rows, delta_rows, sorted(rm_effective))
 
 
-def test_folded_write_equals_base_minus_rm_plus_delta(spark):
+def test_folded_write_equals_base_minus_rm_plus_delta(spark, tmp_path):
     """Round-15 fold: _write_base_index(rm_keys=, delta_enc=) writes the
     post-delta state in ONE pass — on-disk content must equal
     encode(base) minus the removal keys plus the delta encodings, for an
     arbitrary (not batch-derived) delta, including a list emptied by the
     removal (static overwrite clears its directory)."""
     vecs, centroids, cb, seed_rows = _frozen_fit(spark)
-    path = ivf_pq_upsert_location(*corpus_fingerprint(vecs)) + "_foldtest"
+    # NOT a sibling of the real index location: the oracle globs every
+    # index directory under the warehouse root and casts its f= key to BIGINT
+    path = str(tmp_path / "idx")
     base = {
         (int(r["vec_id"]), int(r["list_id"]), tuple(r["codes"]))
         for r in _pq_encode(vecs, centroids, cb).collect()

@@ -408,13 +408,15 @@ def test_apply_band_delta_equals_set_semantics_on_random_inputs(
     assert got == want, (base_rows, delta_rows, sorted(rm_effective))
 
 
-def test_folded_band_write_equals_base_minus_rm_plus_delta(spark):
+def test_folded_band_write_equals_base_minus_rm_plus_delta(spark, tmp_path):
     """Round-15 fold: _write_base_band_index(rm_keys=, delta_bands=)
     writes the post-delta state in ONE pass — on-disk content must equal
     bands(hist) minus the removal keys plus the delta band rows, for an
     arbitrary delta, including a partition emptied by the removal."""
-    hist, max_id, path = _hist_stats(spark)
-    path = path + "_foldtest"
+    hist, max_id, _ = _hist_stats(spark)
+    # NOT a sibling of the real index location: the oracle globs every
+    # index directory under the warehouse root and casts its f= key to BIGINT
+    path = str(tmp_path / "idx")
     base = {
         (int(r["doc_id"]), int(r["band_idx"]), int(r["x"]), int(r["y"]), int(r["bucket"]))
         for r in _bands_with_bucket(
